@@ -1,29 +1,40 @@
-"""Alias canonicalization — connected components over alias edges.
+"""Alias canonicalization — alias chains collapse onto one canonical surface.
 
 The reference resolves aliases only implicitly (each normalizer maps surface
 → canonical in one hop; OICI recurses once, ``OICI_database.py:34-39``). At
-KG scale alias chains (A→B→C) must collapse to one canonical id: connected
-components via iterative min-id label propagation — pure DataFrame self-joins
-(GraphFrames-free), the standard alternating contraction:
+KG scale alias chains (A→B→C) must collapse to one canonical surface: the
+connected components of the alias graph, each mapped to one representative.
 
-    label(v) ← min(label(v), min over neighbors(label(n)))
+Alias edge sets are dictionary-sized, so :func:`canonical_alias_map`
+collects up to ``DRIVER_COLLECT_CAP`` edges (the same bound as
+``normalize_mentions``' driver path) in one bounded action and runs
+union-find in-process; :func:`apply_alias_map` collects the map and only
+the dim rows of its representatives, picks the rep rows on the driver and
+joins them into the mention stream as one broadcast table. Small frames
+stay in-process rather than paying a Spark job per contraction round.
 
-Each iteration is one shuffle on ``node``; ``localCheckpoint`` truncates the
-growing lineage so plan size stays O(1) per iteration (critical for the
-fixpoint loop at scale). Converges in O(diameter) iterations; alias chains
-in practice are short (≤ 32 capped).
+Above the bound the map comes from the distributed, diameter-independent
+:func:`connected_components_star` (alternating large-star / small-star,
+O(log² n) rounds, ``localCheckpoint`` per round so plan size stays O(1)).
+Plain min-id label propagation (:func:`connected_components`) converges in
+O(diameter) rounds and raises above its cap; no pipeline path uses it.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from .normalize import DRIVER_COLLECT_CAP, _dim_row_sort_key
 
 
 def connected_components(
     edges: DataFrame, max_iterations: int = 32, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """edges(src, dst) → (node, component) with component = min node id.
+    """edges(src, dst) → (node, component) with component = min node id, by
+    iterative min-id label propagation (one shuffle per round).
 
     Deterministic: component ids are the lexicographic min over each
     component (stable across partitionings and cluster sizes).
@@ -157,22 +168,52 @@ def connected_components_star(
     ).select("node", F.coalesce("_root", "node").alias("component"))
 
 
-def canonical_alias_map(
-    alias_edges: DataFrame, dim: DataFrame, algorithm: str = "star"
-) -> DataFrame:
-    """Collapse alias chains onto dimension canonicals.
+def _local_table(spark, rows: list, schema: T.StructType) -> DataFrame:
+    """A driver-built table. Going through pandas and Arrow, a small one
+    plans as a ``LocalRelation``: reading it launches no Spark job and no
+    Python worker (a list goes through a pickled RDD and pays both)."""
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
 
-    alias_edges(src, dst): surface alias pairs. Returns
-    (surface, canonical_surface): every member of a component maps to the
-    component's representative — preferring a surface present in ``dim``
-    (so chains terminate at a real canonical entity), else the min id.
 
-    Default algorithm is the diameter-independent star variant (alias
-    graph shapes are adversary-controlled web data); "propagation" is
-    available when the diameter is known small.
-    """
-    cc = connected_components_star if algorithm == "star" else connected_components
-    comp = cc(alias_edges)
+def _dim_rows(dim: DataFrame, surfaces, cols: list[str]) -> list:
+    """The ``cols`` of every ``dim`` row whose surface is in ``surfaces``: a
+    broadcast semi-join against the driver-side key set, then one collect."""
+    if not surfaces:
+        return []
+    keys = _local_table(
+        dim.sparkSession,
+        [(s,) for s in surfaces],
+        T.StructType([T.StructField("surface", dim.schema["surface"].dataType)]),
+    )
+    return dim.join(F.broadcast(keys), "surface", "left_semi").select(*cols).collect()
+
+
+def _components(edges) -> list[list]:
+    """Connected components of an edge list (union-find with path halving)."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[rv] = ru
+    groups: dict = {}
+    for x in parent:
+        groups.setdefault(find(x), []).append(x)
+    return list(groups.values())
+
+
+def _star_alias_map(edges: DataFrame, dim: DataFrame) -> DataFrame:
+    """:func:`canonical_alias_map` through distributed connected components,
+    for edge sets above the driver bound."""
+    comp = connected_components_star(edges)
     dim_surfaces = dim.select(F.col("surface").alias("node")).distinct()
     rep = (
         comp.join(dim_surfaces.withColumn("_in_dim", F.lit(1)), "node", "left")
@@ -190,29 +231,42 @@ def canonical_alias_map(
     )
 
 
-def _rep_rows(dim: DataFrame, remap: list[str], part: list[str], pfx: str) -> DataFrame:
-    """One dim row per ``part`` key, chosen VALUE-deterministically (min
-    (canonical, entity_id, code) cast to string, nulls last — the same
-    ordering as ``normalize._dedup_dimn``). ``dropDuplicates`` here would be
-    row-order-dependent: a surface present under multiple kinds (or as
-    normalization-collapsed duplicates) would hand back an arbitrary row's
-    ids, differing across runs/partitionings."""
-    from pyspark.sql import Window
+def canonical_alias_map(alias_edges: DataFrame, dim: DataFrame) -> DataFrame:
+    """Collapse alias chains onto dimension canonicals.
 
-    order = [
-        F.col(c).cast("string").asc_nulls_last()
-        for c in ("canonical", "entity_id", "code")
-        if c in dim.columns
-    ]
-    w = Window.partitionBy(*part).orderBy(*order)
-    return (
-        dim.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("surface").alias(f"{pfx}surface"),
-            *[F.col(c).alias(f"{pfx}kind") for c in ("kind",) if "kind" in part],
-            *[F.col(c).alias(f"{pfx}{c}") for c in remap],
-        )
+    alias_edges(src, dst): surface alias pairs. Returns
+    (surface, canonical_surface): every member of a component maps to the
+    component's representative — the smallest member present in ``dim``
+    (so chains terminate at a real canonical entity), else the smallest
+    member. Edges with a null endpoint and self-loops are dropped, so a
+    surface appears only if it has an edge to another surface.
+
+    Up to ``DRIVER_COLLECT_CAP`` edges are collected in one bounded action
+    and resolved by union-find on the driver; the result is a local table.
+    Above the bound the map comes from :func:`connected_components_star`
+    (diameter-independent: alias graph shapes are adversary-controlled web
+    data). Both paths give the same map: Python's code-point order on
+    surfaces is Spark's binary UTF-8 string order.
+    """
+    edges = alias_edges.filter(F.col("src") != F.col("dst")).select("src", "dst")
+    rows = edges.limit(DRIVER_COLLECT_CAP + 1).collect()
+    if len(rows) > DRIVER_COLLECT_CAP:
+        return _star_alias_map(edges, dim)
+    groups = _components(set(map(tuple, rows)))
+    in_dim = {
+        r.surface for r in _dim_rows(dim, [m for g in groups for m in g], ["surface"])
+    }
+    pairs = []
+    for members in groups:
+        rep = min([m for m in members if m in in_dim] or members)
+        pairs.extend((m, rep) for m in members)
+    t = edges.schema["src"].dataType
+    return _local_table(
+        edges.sparkSession,
+        pairs,
+        T.StructType(
+            [T.StructField("surface", t), T.StructField("canonical_surface", t)]
+        ),
     )
 
 
@@ -234,70 +288,60 @@ def apply_alias_map(
     carry kinds — a surface shared by two kinds must not hand the other
     kind's ids back — falling back to a kind-agnostic row when that kind
     has no dim entry for the surface. Either way the row is picked
-    value-deterministically (min (canonical, entity_id, code), matching
-    ``normalize._dedup_dimn``), never by row order. Without the remap, a
-    mention normalized to entity B then alias-collapsed onto A's surface
-    kept B's entity_id, so the nodes table split one collapsed entity
-    across two ids. A representative absent from dim maps its component's
-    ids to null — consistently, so the component still collapses to one
-    node key."""
-    am = alias_map.withColumnRenamed("surface", col)
+    value-deterministically (min (canonical, entity_id, code) cast to
+    string, nulls last, matching ``normalize._dedup_dimn``), never by row
+    order. Without the remap, a mention normalized to entity B then
+    alias-collapsed onto A's surface kept B's entity_id, so the nodes table
+    split one collapsed entity across two ids. A representative absent
+    from dim maps its component's ids to null — consistently, so the
+    component still collapses to one node key.
+
+    The alias map is collected (it is broadcast-sized), only the dim rows
+    of its representatives are collected, and the rep rows are picked on
+    the driver; the map and the picked ids join the mention stream as one
+    broadcast table, so the returned plan holds no shuffle or window.
+    """
+    amap = alias_map.collect()
+    fields, rows = list(alias_map.schema.fields), [list(r) for r in amap]
     remap = [c for c in id_cols if dim is not None and c in mentions.columns]
-    use_kind = (
-        bool(remap) and "kind" in dim.columns and kind_col in mentions.columns
-    )
-    out = mentions.join(F.broadcast(am), col, "left")
-    aliased = F.col("canonical_surface").isNotNull()
+    use_kind = bool(remap) and "kind" in dim.columns and kind_col in mentions.columns
     if remap:
+        # each map row carries its representative's kind-agnostic ids
+        # (``_fb_ids``) and, per kind, that kind's ids (``_kind_ids``)
+        order = [c for c in ("canonical", "entity_id", "code") if c in dim.columns]
+        cols = ["surface", *(["kind"] if use_kind else []), *remap, *order]
+        reps = {r["canonical_surface"] for r in amap} - {None}
+        dim_rows = [r.asDict() for r in _dim_rows(dim, reps, list(dict.fromkeys(cols)))]
+        fb, by_kind = {}, {}
+        for r in sorted(dim_rows, key=_dim_row_sort_key):
+            ids = tuple(r[c] for c in remap)
+            fb.setdefault(r["surface"], ids)
+            if use_kind and r["kind"] is not None:
+                by_kind.setdefault(r["surface"], {}).setdefault(r["kind"], ids)
+        ids_t = T.StructType([T.StructField(c, dim.schema[c].dataType) for c in remap])
+        kind_t = dim.schema["kind"].dataType if use_kind else T.StringType()
+        fields += [
+            T.StructField("_fb_ids", ids_t),
+            T.StructField("_kind_ids", T.MapType(kind_t, ids_t)),
+        ]
+        for row, r in zip(rows, amap):
+            row += [fb.get(r["canonical_surface"]), by_kind.get(r["canonical_surface"])]
+    table = _local_table(mentions.sparkSession, rows, T.StructType(fields))
+    out = mentions.join(F.broadcast(table.withColumnRenamed("surface", col)), col, "left")
+    for c in remap:
+        value = F.col("_fb_ids")[c]
         if use_kind:
-            rep = _rep_rows(dim, remap, ["surface", "kind"], "_rep_")
-            fb = _rep_rows(dim, remap, ["surface"], "_fb_")
-            out = (
-                out.join(
-                    F.broadcast(rep),
-                    (F.col("canonical_surface") == F.col("_rep_surface"))
-                    & (F.col(kind_col) == F.col("_rep_kind")),
-                    "left",
-                )
-                .join(
-                    F.broadcast(fb),
-                    F.col("canonical_surface") == F.col("_fb_surface"),
-                    "left",
-                )
-            )
-            kind_matched = F.col("_rep_surface").isNotNull()
-            for c in remap:
-                # when the kind-matched rep exists use it WHOLE (even its
-                # null columns) — coalescing per-column would splice another
-                # kind's code onto this kind's entity_id
-                out = out.withColumn(
-                    c,
-                    F.when(
-                        aliased,
-                        F.when(kind_matched, F.col(f"_rep_{c}")).otherwise(
-                            F.col(f"_fb_{c}")
-                        ),
-                    ).otherwise(F.col(c)),
-                )
-            out = out.drop(
-                "_rep_surface", "_rep_kind", "_fb_surface",
-                *[f"_rep_{c}" for c in remap],
-                *[f"_fb_{c}" for c in remap],
-            )
-        else:
-            rep = _rep_rows(dim, remap, ["surface"], "_rep_")
-            out = out.join(
-                F.broadcast(rep),
-                F.col("canonical_surface") == F.col("_rep_surface"),
-                "left",
-            )
-            for c in remap:
-                out = out.withColumn(
-                    c, F.when(aliased, F.col(f"_rep_{c}")).otherwise(F.col(c))
-                )
-            out = out.drop("_rep_surface", *[f"_rep_{c}" for c in remap])
-    return out.withColumn(col, F.coalesce("canonical_surface", F.col(col))).drop(
-        "canonical_surface"
+            # a kind-matched rep row is used WHOLE (even its null columns) —
+            # coalescing per column would splice another kind's code onto
+            # this kind's entity_id
+            hit = F.col("_kind_ids")[F.col(kind_col)]
+            value = F.when(hit.isNotNull(), hit[c]).otherwise(value)
+        out = out.withColumn(
+            c, F.when(F.col("canonical_surface").isNotNull(), value).otherwise(F.col(c))
+        )
+    return (
+        out.withColumn(col, F.coalesce("canonical_surface", F.col(col)))
+        .drop("canonical_surface", "_fb_ids", "_kind_ids")
     )
 
 

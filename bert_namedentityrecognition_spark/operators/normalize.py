@@ -38,6 +38,10 @@ from pyspark.sql.functions import pandas_udf
 from ..oracle.fuzzy import ratio
 from ..oracle.textproc import han_to_zen
 
+# Row bound under which a small table (distinct surfaces, alias edges) is
+# collected and resolved in-process instead of by distributed stages.
+DRIVER_COLLECT_CAP = 100_000
+
 SENTINEL = ""
 
 
@@ -541,7 +545,7 @@ def normalize_mentions(
     dim: DataFrame,
     threshold: float = 70.0,
     type_to_kind: dict[str, str] | None = None,
-    max_driver_surfaces: int = 100_000,
+    max_driver_surfaces: int = DRIVER_COLLECT_CAP,
 ) -> DataFrame:
     """mentions + canonical columns. Distinct-surface dedup then broadcast
     join back — the mention stream itself is never shuffled.

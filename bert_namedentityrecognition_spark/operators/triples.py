@@ -231,12 +231,12 @@ def build_graph(
             F.countDistinct("url").alias("doc_count"),
         )
     )
-    surf_map = dim.select(
-        F.col("surface").alias("_k"), F.col("entity_id").alias("_id")
-    ).dropDuplicates(["_k"])
-    canon_map = dim.select(
-        F.col("canonical").alias("_k"), F.col("entity_id").alias("_id")
-    ).dropDuplicates(["_k"])
+    # a key carried by several dim rows resolves to its min entity_id, not
+    # to whichever row dropDuplicates meets first (row order is not stable)
+    surf_map, canon_map = (
+        dim.groupBy(F.col(k).alias("_k")).agg(F.min("entity_id").alias("_id"))
+        for k in ("surface", "canonical")
+    )
     edges = (
         triples.join(
             F.broadcast(surf_map.withColumnRenamed("_id", "_src")),

@@ -7,7 +7,9 @@ Spark dataflow (SURVEY.md §7):
       → mentions    (one mapInPandas Arrow stage: han_to_zen + tag + BIO decode)
       → normalized  (distinct surfaces → exact broadcast join → banded fuzzy
                      broadcast join + window top-1 → broadcast join back)
-      → canonical   (alias connected-components map, broadcast)
+      → canonical   (alias components: union-find on the driver over one
+                     bounded collect of the edges, distributed star fallback
+                     above the bound; rep ids picked in-process, broadcast)
       → triples     (co-scope pairing join + salted groupBy count)
       → nodes/edges (partitioned parquet sinks; Iceberg bucketing documented)
 

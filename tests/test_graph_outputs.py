@@ -165,3 +165,30 @@ def test_alias_collapse_unifies_node_ids(spark):
         r for r in out["nodes"].collect()
         if r.entity_id == "D2" or r.canonical == "ロキソプロフェン"
     ]
+
+
+def test_build_graph_resolves_duplicate_keys_to_min_entity_id(spark):
+    """A surface or canonical carried by two dim rows resolves to the
+    smaller entity_id whatever the dim row order (the larger-id row comes
+    first here, where a first-row pick takes it)."""
+    from bert_namedentityrecognition_spark.operators.triples import build_graph
+
+    dim = spark.createDataFrame(
+        [
+            ("D9", "ロキソニン", "ロキソニン", "A9", "drug", None),
+            ("D1", "ロキソニン", "ロキソニン", "A1", "drug", None),
+            ("S9", "ずつう", "頭痛", "I9", "symptom", None),
+            ("S1", "頭痛", "頭痛", "I1", "symptom", None),
+        ],
+        "entity_id string, surface string, canonical string, code string, "
+        "kind string, human_check string",
+    ).coalesce(1)
+    triples = spark.createDataFrame(
+        [("ロキソニン", "HAS_ADVERSE_EVENT", "頭痛", 3)],
+        "subj string, pred string, obj string, count long",
+    )
+    normalized = spark.createDataFrame(
+        [], "url string, canonical string, type string, entity_id string"
+    )
+    (edge,) = build_graph(normalized, dim, triples)["edges"].collect()
+    assert (edge.src_id, edge.dst_id) == ("D1", "S1")
